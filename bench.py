@@ -538,6 +538,14 @@ def _time_canaries(spark) -> dict[str, float]:
     return res
 
 
+def _codegen_compiles(spark) -> int:
+    """Janino compilations so far in this JVM (Spark's CodegenMetrics).
+    A query whose count stays above 0 on repeats is evicting or
+    regenerating its generated classes."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def _sf_from_dir(d: str) -> float:
     base = os.path.basename(d.rstrip("/"))
     try:
@@ -560,6 +568,7 @@ def main() -> None:
     spark = get_spark(app_name="bench")
 
     timings: dict[str, float] = {}
+    compiles: dict[str, int] = {}
 
     # warm the JVM + parquet footers once (excluded from timings)
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
@@ -571,11 +580,13 @@ def main() -> None:
     for name in BENCH_QUERIES:
         fn = contracts.QUERIES[name]
         best = float("inf")
+        c0 = _codegen_compiles(spark)
         for _ in range(max(1, REPEATS)):
             t0 = time.perf_counter()
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 4)
+        compiles[name] = _codegen_compiles(spark) - c0
         # untimed: release py-side plan refs and let the ContextCleaner
         # drop accumulated broadcasts — otherwise heap pressure from 50
         # queries' broadcast vars inflates later queries' GC time (q18
@@ -592,14 +603,17 @@ def main() -> None:
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     feats = emb.select(F.col("embedding").cast("array<double>").alias("features"))
     if ONLY:
-        _finish(timings, contracts, canary_start, _time_canaries(spark))
+        _finish(timings, compiles, contracts, canary_start, _time_canaries(spark))
         return
+    c0 = _codegen_compiles(spark)
     t0 = time.perf_counter()
     kmeans_fit(feats, KMEANS_FIT_K, seed=42, max_iter=KMEANS_FIT_ITERS, tol=0.0)
     timings["kmeans_fit_embeddings"] = round(time.perf_counter() - t0, 4)
+    compiles["kmeans_fit_embeddings"] = _codegen_compiles(spark) - c0
 
     from k_means_using_mapreduce_spark.operators.kmeans import kmeans_fit_minibatch
 
+    c0 = _codegen_compiles(spark)
     t0 = time.perf_counter()
     kmeans_fit_minibatch(
         feats,
@@ -612,8 +626,9 @@ def main() -> None:
     timings["kmeans_fit_minibatch_embeddings"] = round(
         time.perf_counter() - t0, 4
     )
+    compiles["kmeans_fit_minibatch_embeddings"] = _codegen_compiles(spark) - c0
 
-    _finish(timings, contracts, canary_start, _time_canaries(spark))
+    _finish(timings, compiles, contracts, canary_start, _time_canaries(spark))
 
 
 
@@ -726,12 +741,15 @@ def compare_vs_prev(
 
 def _finish(
     timings: dict[str, float],
+    compiles: dict[str, int],
     contracts,
     canary_start: dict[str, float],
     canary_end: dict[str, float],
 ) -> None:
     """Totals, oracle comparison, family subtotals, canary-normalized
-    deltas vs the previous detail file, compact stdout line. Solo
+    deltas vs the previous detail file, compact stdout line.
+    ``compiles`` holds each query's generated-class compilations over
+    all its repeats (``codegen_compiles`` in the detail file). Solo
     (ONLY) runs write BENCH_DETAIL_SOLO.json so the headline
     BENCH_DETAIL.json is never clobbered by a quick loop."""
     total = round(sum(timings.values()), 4)
@@ -754,6 +772,7 @@ def _finish(
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "codegen_compiles": compiles,
         "sf": _sf_from_dir(SF_DIR),
         "canary": {
             "start": canary_start,

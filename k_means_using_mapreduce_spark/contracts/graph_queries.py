@@ -505,9 +505,15 @@ def user_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     hop counts, 6-hop horizon."""
     from ..operators.graph import bfs_hops
 
-    edges = _user_cooc_edges(spark, sf_dir)
-    start = edges.agg(F.min("src").alias("node"))
-    return bfs_hops(edges, start, max_hops=BFS_MAX_HOPS)
+    # pinned for its two consumers (the symmetrized edge list and the
+    # start node), which would otherwise each re-run events -> edges;
+    # the returned levels are checkpointed, so the pin ends here
+    edges = _user_cooc_edges(spark, sf_dir).persist()
+    try:
+        start = edges.agg(F.min("src").alias("node"))
+        return bfs_hops(edges, start, max_hops=BFS_MAX_HOPS)
+    finally:
+        edges.unpersist()
 
 
 BFS_SQL = f"""

@@ -183,18 +183,11 @@ def als_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..operators.sampling import hash_bucket
 
-    ratings = (
-        implicit_ratings(
-            load_table(spark, sf_dir, "orders"),
-            load_table(spark, sf_dir, "lineitem"),
-        )
-        .withColumn(
-            "fold", hash_bucket(F.concat_ws(":", "user", "item"), HOLD_MOD)
-        )
-        # pinned: the train half-step and the held-out eval otherwise
-        # each re-run the orders x lineitem rating derivation (guide §5;
-        # measured ~10% solo, round 10)
-        .localCheckpoint(eager=True)
+    ratings = implicit_ratings(
+        load_table(spark, sf_dir, "orders"),
+        load_table(spark, sf_dir, "lineitem"),
+    ).withColumn(
+        "fold", hash_bucket(F.concat_ws(":", "user", "item"), HOLD_MOD)
     )
     train = ratings.where(F.col("fold") != 0)
     held = ratings.where(

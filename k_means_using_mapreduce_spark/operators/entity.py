@@ -63,16 +63,21 @@ def blocked_match_candidates(
     # fan_out the PROBE side: the block join broadcasts one side, so on
     # a single-row-group scan every within-block levenshtein comparison
     # (the quadratic per-block work) would run inside the one scan task
-    # (guide §2.5; no-op when the scan is already wide)
+    # (guide §2.5; no-op when the scan is already wide). The hint keeps
+    # the planner from picking the fanned side as the build side, which
+    # would pay for the repartition and still probe in one task. The
+    # (block key, id, name) projection must fit a broadcast.
     left = fan_out(base).select(
         *block_cols,
         F.col("_id").alias("id_a"),
         F.col("_name").alias("name_a"),
     )
-    right = base.select(
-        *block_cols,
-        F.col("_id").alias("id_b"),
-        F.col("_name").alias("name_b"),
+    right = F.broadcast(
+        base.select(
+            *block_cols,
+            F.col("_id").alias("id_b"),
+            F.col("_name").alias("name_b"),
+        )
     )
     pairs = left.join(right, block_cols).where(F.col("id_a") < F.col("id_b"))
     # threshold form: bounded-band DP that abandons a pair the moment

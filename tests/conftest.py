@@ -36,8 +36,18 @@ def contract_subset(names):
     ]
 
 
+def _driver_memory() -> str:
+    """Half the host's RAM, at most get_spark's 48g default. With a heap
+    cap above physical memory, G1 keeps committing heap under the
+    suite's job churn until the kernel kills the one JVM that every
+    later test shares."""
+    half_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 31
+    return f"{max(1, min(48, half_gib))}g"
+
+
 @pytest.fixture(scope="session")
 def spark():
+    os.environ.setdefault("SPARK_DRIVER_MEM", _driver_memory())
     s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
 

@@ -1,5 +1,6 @@
 """operators/ivm.py: delta-merge equals full recompute, group
-drop-to-zero, negative-delta groups, strict op validation."""
+drop-to-zero, negative-delta groups, strict op validation, and a
+strict call that reuses its generated code."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ from k_means_using_mapreduce_spark.operators.ivm import (
     maintain_aggregate,
     merge_aggregate,
 )
+from k_means_using_mapreduce_spark.session import CODEGEN_CACHE_ENTRIES
 
 
 def _rows(spark, rows):
@@ -64,6 +66,26 @@ def test_strict_rejects_unknown_ops(spark):
     # branch -- callers opting out own that semantics.
     out = delta_aggregate(bad, ["g"], "v", strict=False).first()
     assert out["n"] == -1
+
+
+def _compiles(spark) -> int:
+    """Janino compilations so far in this JVM."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_strict_repeat_compiles_nothing(spark):
+    # a limit names its generated counter by a global id, so a
+    # limit(1) probe would compile fresh classes on every call
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+    changes = _changes(spark, [("a", 1.0, "i"), ("b", 2.0, "d")])
+    first = delta_aggregate(changes, ["g"], "v").collect()
+    before = _compiles(spark)
+    again = delta_aggregate(changes, ["g"], "v").collect()
+    assert _compiles(spark) == before
+    assert sorted(again) == sorted(first)
 
 
 def test_merge_drops_inconsistent_negative_groups(spark):
